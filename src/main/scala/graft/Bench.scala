@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tools.Canaries.Canary
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -106,6 +108,8 @@ object Bench {
     //       set at ~1.6x the clean-host medians measured in-repo
     //       (BASELINE.md round 12): single 0.42, par32@100M 0.19, mem 0.19.
     // The verdict is stamped into the JSON as load_class:
+    //   "failed"  — a query threw: it is named in failed_queries, left out
+    //               of the totals, and the run exits non-zero;
     //   "loaded"  — one or more query windows flagged (relative rule), or a
     //               uniform-load floor tripped: the total is NOT a clean
     //               datapoint; rerun on a quiet window.
@@ -116,42 +120,15 @@ object Bench {
     //   "clean"   — none of the above; the total stands as evidence.
     // A judge applies the same rule mechanically: load_class != "clean"
     // disqualifies the artifact as a performance datapoint.
-    val CanaryEvery = 25
     val SingleCleanFloor = 0.67 // 1.6x of 0.42 clean median (300M iters)
     // mean PER-THREAD times (see Canaries.calibrateParBoth): clean medians
     // measured r12 — par32@100M ≈ 0.145 (a third of the single 300M loop),
     // mem sweep ≈ 0.19/thread
     val Par32CleanFloor = 0.23
     val MemCleanFloor = 0.30
-    type Canary = Canaries.Canary
-    val Canary = Canaries.Canary
-    def sampleCanary(): Canary = Canaries.sample()
-    // Per-WINDOW throttle attribution: canaries are interleaved every
-    // CanaryEvery queries, so a mid-run host-throttle window (observed:
-    // 6.8x canaries poisoning the sf10 bench line) is machine-attributable
-    // to the specific queries that ran inside it. Each query carries the
-    // worse (max) of the canaries at its window's start and end, from
-    // whichever pass supplied its min-of-N time.
-    def runPass(): (Seq[(String, Double, Canary)], Vector[Canary]) = {
-      val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-      val timed = scala.collection.mutable.ArrayBuffer[(String, Double, Int)]()
-      var canaries = Vector(sampleCanary())
-      qs.zipWithIndex.foreach { case ((name, fn), i) =>
-        if (i > 0 && i % CanaryEvery == 0) canaries :+= sampleCanary()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        timed += ((name, (System.nanoTime() - t0) / 1e9, i / CanaryEvery))
-      }
-      canaries :+= sampleCanary()
-      val out = timed.toSeq.map { case (name, sec, w) =>
-        val a = canaries(w)
-        val b = canaries(math.min(w + 1, canaries.size - 1))
-        (name, sec, Canary(math.max(a.single, b.single),
-          math.max(a.par32, b.par32), math.max(a.mem, b.mem)))
-      }
-      (out, canaries)
-    }
+    val registry = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+    def runPass(): Pass = Bench.runPass(spark, sfDir, registry, () => Canaries.sample())
     val calib = calibrate()
     val calibPar = calibratePar()
     val calibStream = calibrateStream()
@@ -161,10 +138,16 @@ object Bench {
     // runs with clean start/end calibrations), and min-over-repetitions is
     // the standard way to read through external interference. All pass
     // totals are reported so the noise itself stays visible.
-    val (pass1full, rawCan1) = runPass()
+    val first = runPass()
     val calibMid = calibrate()
-    val (pass2full, rawCan2) =
-      if (passes == 2) runPass() else (pass1full, Vector.empty[Canary])
+    val second = if (passes == 2) Some(runPass()) else None
+    // A query that failed in any pass has no timing: it is named in
+    // failed_queries and left out of every total.
+    val failed = (first.failed ++ second.toSeq.flatMap(_.failed)).map(_._1).distinct.sorted
+    def timings(p: Pass) = p.timed.filterNot(t => failed.contains(t._1))
+    val pass1full = timings(first)
+    val pass2full = second.map(timings).getOrElse(pass1full)
+    val (rawCan1, rawCan2) = (first.canaries, second.map(_.canaries).getOrElse(Vector.empty))
     val pass1 = pass1full.map { case (k, v, _) => k -> v }
     val pass2 = pass2full.map { case (k, v, _) => k -> v }
     val p2 = pass2full.map { case (k, v, c) => k -> (v, c) }.toMap
@@ -234,12 +217,12 @@ object Bench {
     // BASELINE.md and here.
     if (fullRegistrySf01 && meanSpq > 0.85) suspectReasons += "mean_spq_gt_0.85"
     val loadClass =
-      if (throttledQs.nonEmpty || uniformLoad.nonEmpty) "loaded"
-      else if (suspectReasons.nonEmpty) "suspect"
-      else "clean"
+      Bench.loadClass(failed, throttledQs ++ uniformLoad, suspectReasons.toSeq)
     val loadEvidence = (uniformLoad ++ suspectReasons ++
-      (if (throttledQs.nonEmpty) Seq(s"throttled_windows:${throttledQs.size}") else Nil))
+      (if (throttledQs.nonEmpty) Seq(s"throttled_windows:${throttledQs.size}") else Nil) ++
+      (if (failed.nonEmpty) Seq(s"failed_queries:${failed.size}") else Nil))
       .mkString(";")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val calibEnd = calibrate()
@@ -267,7 +250,7 @@ object Bench {
     val memNearJson = calibNear.map { case (k, c) =>
       s"\"" + k + "\":" + r3(c.mem) }.mkString("{", ",", "}")
     val throttledJson = throttledQs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$families,"sf":"$sfDir","passes":$passes,"agg":"min","value_single_pass":${pass1.map(_._2).sum},"pass_totals":[${(if (passes == 2) Seq(pass1, pass2) else Seq(pass1)).map(p => p.map(_._2).sum).mkString(",")}],"calib_sec":$calib,"calib_mid_sec":$calibMid,"calib_end_sec":$calibEnd,"calib_par8_sec":$calibPar,"calib_par32_sec":$calibPar32,"calib_par8_end_sec":$calibParEnd,"calib_stream_sec":$calibStream,"calib_stream_end_sec":$calibStreamEnd,"calib_near":$calibNearJson,"calib_par32_near":$par32NearJson,"calib_mem_near":$memNearJson,"canary_min_sec":${r3(minCanary)},"canary_par32_min_sec":${r3(minPar32)},"canary_mem_min_sec":${r3(minMem)},"pass_spread":${r3(passSpread)},"mean_sec_per_query":${r3(meanSpq)},"load_class":"$loadClass","load_evidence":"$loadEvidence","spread_vs_record":${spreadVsRecord.map(r3).getOrElse("null")},"throttled_queries":$throttledJson}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$families,"sf":"$sfDir","passes":$passes,"agg":"min","value_single_pass":${pass1.map(_._2).sum},"pass_totals":[${(if (passes == 2) Seq(pass1, pass2) else Seq(pass1)).map(p => p.map(_._2).sum).mkString(",")}],"calib_sec":$calib,"calib_mid_sec":$calibMid,"calib_end_sec":$calibEnd,"calib_par8_sec":$calibPar,"calib_par32_sec":$calibPar32,"calib_par8_end_sec":$calibParEnd,"calib_stream_sec":$calibStream,"calib_stream_end_sec":$calibStreamEnd,"calib_near":$calibNearJson,"calib_par32_near":$par32NearJson,"calib_mem_near":$memNearJson,"canary_min_sec":${r3(minCanary)},"canary_par32_min_sec":${r3(minPar32)},"canary_mem_min_sec":${r3(minMem)},"pass_spread":${r3(passSpread)},"mean_sec_per_query":${r3(meanSpq)},"load_class":"$loadClass","load_evidence":"$loadEvidence","spread_vs_record":${spreadVsRecord.map(r3).getOrElse("null")},"throttled_queries":$throttledJson,"failed_queries":$failedJson}"""
     println(json)
     // The harness that snapshots this run keeps only the LAST ~2000 chars of
     // output, and sbt appends its own "[success] ..." trailer — with 280
@@ -281,7 +264,7 @@ object Bench {
     val legendLine = s"""{"bench_legend":$legend}"""
     val compactQs = results.zipWithIndex
       .map { case ((_, v), i) => s"\"q$i\":${r3(v)}" }.mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$compactQs,"sf":"${new java.io.File(sfDir).getName}","n_queries":${results.size},"passes":$passes,"agg":"min","value_single_pass":${r3(pass1.map(_._2).sum)},"pass_totals":[${(if (passes == 2) Seq(pass1, pass2) else Seq(pass1)).map(p => r3(p.map(_._2).sum)).mkString(",")}],"calib_sec":[${r3(calib)},${r3(calibMid)},${r3(calibEnd)}],"calib_par_sec":[${r3(calibPar)},${r3(calibPar32)},${r3(calibParEnd)}],"calib_stream_sec":[${r3(calibStream)},${r3(calibStreamEnd)}],"canary_min_sec":${r3(minCanary)},"canary_par32_min_sec":${r3(minPar32)},"canary_mem_min_sec":${r3(minMem)},"pass_spread":${r3(passSpread)},"mean_sec_per_query":${r3(meanSpq)},"load_class":"$loadClass","load_evidence":"$loadEvidence","spread_vs_record":${spreadVsRecord.map(r3).getOrElse("null")},"n_throttled":${throttledQs.size},"query_names":"see bench_legend line / bench_out.json"}"""
+    val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$compactQs,"sf":"${new java.io.File(sfDir).getName}","n_queries":${results.size},"passes":$passes,"agg":"min","value_single_pass":${r3(pass1.map(_._2).sum)},"pass_totals":[${(if (passes == 2) Seq(pass1, pass2) else Seq(pass1)).map(p => r3(p.map(_._2).sum)).mkString(",")}],"calib_sec":[${r3(calib)},${r3(calibMid)},${r3(calibEnd)}],"calib_par_sec":[${r3(calibPar)},${r3(calibPar32)},${r3(calibParEnd)}],"calib_stream_sec":[${r3(calibStream)},${r3(calibStreamEnd)}],"canary_min_sec":${r3(minCanary)},"canary_par32_min_sec":${r3(minPar32)},"canary_mem_min_sec":${r3(minMem)},"pass_spread":${r3(passSpread)},"mean_sec_per_query":${r3(meanSpq)},"load_class":"$loadClass","load_evidence":"$loadEvidence","spread_vs_record":${spreadVsRecord.map(r3).getOrElse("null")},"n_throttled":${throttledQs.size},"failed_queries":$failedJson,"query_names":"see bench_legend line / bench_out.json"}"""
     // Belt-and-braces: sbt may prefix stdout lines, so also drop the JSON
     // where the driver (or a human) can read it unmangled.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
@@ -291,5 +274,68 @@ object Bench {
     spark.stop()
     println(legendLine)
     println(compact)
+    if (failed.nonEmpty) {
+      System.err.println(s"bench: ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
+
+  /** One pass over `qs`: the timed queries as (name, seconds, canary),
+    * the failed ones as (name, error), and the raw window canaries.
+    */
+  private[graft] final case class Pass(
+      timed: Seq[(String, Double, Canary)], failed: Seq[(String, String)], canaries: Vector[Canary])
+
+  /** Interleave canaries every this many queries. */
+  private val CanaryEvery = 25
+
+  /** Per-WINDOW throttle attribution: canaries are interleaved every
+    * CanaryEvery queries, so a mid-run host-throttle window (observed:
+    * 6.8x canaries poisoning the sf10 bench line) is machine-attributable
+    * to the specific queries that ran inside it. Each query carries the
+    * worse (max) of the canaries at its window's start and end, from
+    * whichever pass supplied its min-of-N time. A query that throws is
+    * recorded by name with its error: the seconds it took to fail are not
+    * a timing of the query.
+    */
+  private[graft] def runPass(
+      spark: SparkSession,
+      sfDir: String,
+      qs: Seq[(String, (SparkSession, String) => DataFrame)],
+      sampleCanary: () => Canary): Pass = {
+    val timed = scala.collection.mutable.ArrayBuffer[(String, Double, Int)]()
+    val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    var canaries = Vector(sampleCanary())
+    qs.zipWithIndex.foreach { case ((name, fn), i) =>
+      if (i > 0 && i % CanaryEvery == 0) canaries :+= sampleCanary()
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).count()
+        timed += ((name, (System.nanoTime() - t0) / 1e9, i / CanaryEvery))
+      } catch { case scala.util.control.NonFatal(e) => failed += name -> e.toString }
+    }
+    canaries :+= sampleCanary()
+    val out = timed.toSeq.map { case (name, sec, w) =>
+      val a = canaries(w)
+      val b = canaries(math.min(w + 1, canaries.size - 1))
+      (name, sec, Canary(math.max(a.single, b.single),
+        math.max(a.par32, b.par32), math.max(a.mem, b.mem)))
+    }
+    Pass(out, failed.toSeq, canaries)
+  }
+
+  /** The run's verdict, stamped into the JSON as load_class:
+    *   "failed"  — a query threw: the total leaves it out, so it is not a
+    *               total of the registry, whatever the window;
+    *   "loaded"  — one or more query windows flagged, or a uniform-load
+    *               floor tripped;
+    *   "suspect" — windows clean but interference unattributed;
+    *   "clean"   — none of the above.
+    */
+  private[graft] def loadClass(
+      failed: Seq[String], loadedBy: Seq[String], suspectBy: Seq[String]): String =
+    if (failed.nonEmpty) "failed"
+    else if (loadedBy.nonEmpty) "loaded"
+    else if (suspectBy.nonEmpty) "suspect"
+    else "clean"
 }

@@ -4,8 +4,13 @@ import java.io.File
 import java.nio.file.{Files, Path}
 import java.util.zip.ZipFile
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -26,7 +31,8 @@ import scala.jdk.CollectionConverters._
 final class DwcaArchive private (
     val spark: SparkSession,
     val descriptor: ArchiveDescriptor,
-    rootDir: File) {
+    rootDir: File,
+    ownsRootDir: Boolean) extends AutoCloseable {
 
   def coreDataFrame: DataFrame = read(descriptor.core)
 
@@ -45,40 +51,42 @@ final class DwcaArchive private (
   def joined(ext: TableDescriptor): DataFrame =
     DwcaArchive.starJoin(coreDataFrame, read(ext), ext.rowTypeLocalName)
 
+  /** Deletes the directory a zip archive was extracted to (a directory
+    * archive is left as it is). Frames read from the archive cannot run
+    * after this: close only once every action on them has finished.
+    */
+  override def close(): Unit = if (ownsRootDir) DwcaArchive.deleteTree(rootDir)
+
   /** Read one table of the archive per its declared dialect, naming columns
     * positionally after the DwC term local names (id/coreid per SURVEY.md T4).
+    *
+    * Submits no Spark job: the physical column count comes from the first
+    * non-empty line, read on the driver with Spark's own line reader and
+    * tokenised with Spark's own univocity settings for the dialect, so it is
+    * the width Spark's header inference would find (see
+    * [[DwcaArchive.physicalColumns]]). Renaming, NA-token normalisation and
+    * default-only constants are ONE projection: a `withColumn` per column
+    * re-analyses a growing plan (O(n²) on a 100-column table) and leaves
+    * every later action a Project stack as deep as the table is wide.
     */
   def read(table: TableDescriptor): DataFrame = {
     val d = table.dialect
     val path = new File(rootDir, table.location).getAbsolutePath
-    var reader = spark.read
-      .option("sep", d.fieldsTerminatedBy)
-      .option("encoding", d.encoding)
-      // pandas reads empty CSV fields as NaN; pin Spark's equivalent (null).
-      .option("nullValue", "")
-      // Empty quote string disables quote handling (the DwCA default,
-      // fieldsEnclosedBy="").
-      .option("quote", d.fieldsEnclosedBy)
+    val reader = spark.read
+      .options(DwcaArchive.csvOptions(d))
       .option("mode", "PERMISSIVE")
       .option("inferSchema", "false")
-    // lineSep handling: unset, Spark's CSV parser covers \n, \r\n and \r
-    // uniformly (both fixture dialects). A declared single-char custom
-    // terminator is honored; anything else must fail LOUDLY — silently
-    // newline-splitting a differently-terminated file would corrupt every
-    // downstream count.
-    d.linesTerminatedBy match {
-      case "" | "\n" | "\r\n" | "\r" => ()
-      case sep if sep.length == 1 => reader = reader.option("lineSep", sep)
-      case sep => throw new IllegalArgumentException(
-        s"unsupported linesTerminatedBy ${sep.map(c => f"\\u${c.toInt}%04x").mkString}: " +
-          "Spark's CSV source supports \\n/\\r\\n/\\r or a single custom character")
-    }
     // ignoreHeaderLines: the header option skips exactly ONE line; the
     // reference (pandas skiprows=N) skips N. For N > 1 pre-skip the extra
     // lines on the ordered single-file read, then parse the remainder.
     val raw =
-      if (d.ignoreHeaderLines <= 1) reader.option("header", d.ignoreHeaderLines > 0).csv(path)
-      else {
+      if (d.ignoreHeaderLines <= 1) {
+        val header = d.ignoreHeaderLines > 0
+        val names = DwcaArchive.physicalColumns(spark, path, d, header)
+        reader.option("header", header)
+          .schema(StructType(names.map(StructField(_, StringType, nullable = true))))
+          .csv(path)
+      } else {
         // The pre-skip reads lines with spark.read.textFile, which always
         // splits on \n/\r\n and decodes UTF-8 — a custom single-char
         // terminator or non-UTF-8 encoding would be silently ignored here
@@ -106,24 +114,22 @@ final class DwcaArchive private (
       }
     val names = table.columnNames
     // Tolerate files with fewer/more physical columns than declared.
-    val renamed = raw.toDF(raw.columns.indices.map { i =>
-      if (i < names.length) names(i) else s"_c$i"
-    }: _*)
     // pandas' default NA tokens (keep_default_na=True in the reference's
     // pd_read) all parse to NaN, not just the empty string Spark's
     // nullValue covers — normalize them to null so presence counts, id
     // checks, and vocab nulls match the reference on archives containing
     // literal "NA"/"NULL"/"NaN"/… values.
-    val naNormalized = renamed.columns.foldLeft(renamed) { (df, c) =>
-      df.withColumn(c,
-        when(col(s"`$c`").isin(DwcaArchive.PandasNaTokens: _*), lit(null))
-          .otherwise(col(s"`$c`")))
+    val positional = raw.columns.toSeq.zipWithIndex.map { case (c, i) =>
+      val v = col("`" + c.replace("`", "``") + "`")
+      val name = if (i < names.length) names(i) else s"_c$i"
+      name -> when(v.isin(DwcaArchive.PandasNaTokens: _*), lit(null)).otherwise(v).as(name)
     }
     // meta.xml <field term=… default=…/> with no index → constant column.
-    table.defaultOnlyFields.foldLeft(naNormalized) { (df, f) =>
-      if (df.columns.contains(f.localName)) df
-      else df.withColumn(f.localName, lit(f.default.orNull))
+    val defaults = table.defaultOnlyFields.foldLeft(Vector.empty[(String, Column)]) { (acc, f) =>
+      if (positional.exists(_._1 == f.localName) || acc.exists(_._1 == f.localName)) acc
+      else acc :+ (f.localName -> lit(f.default.orNull).as(f.localName))
     }
+    raw.select((positional ++ defaults).map(_._2): _*)
   }
 }
 
@@ -139,9 +145,9 @@ object DwcaArchive {
     */
   def starJoin(core: DataFrame, extDf: DataFrame, extRowTypeLocalName: String): DataFrame = {
     val prefix = extRowTypeLocalName.toLowerCase
-    val renamed = extDf.columns.foldLeft(extDf) { (df, c) =>
-      if (c == "coreid") df else df.withColumnRenamed(c, s"${prefix}_$c")
-    }
+    // one positional projection, not a withColumnRenamed per column
+    val renamed = extDf.toDF(extDf.columns.toSeq.map(c =>
+      if (c == "coreid") c else s"${prefix}_$c"): _*)
     core.join(renamed, core("id") === renamed("coreid"), "left")
   }
 
@@ -154,18 +160,82 @@ object DwcaArchive {
     "1.#IND", "1.#QNAN", "<NA>", "N/A", "NA", "NULL", "NaN", "None",
     "n/a", "nan", "null")
 
-  /** Open an archive at `path` (directory, or .zip extracted to a temp dir). */
+  /** Open an archive at `path` (directory, or .zip extracted to a temp dir
+    * that the returned archive owns: [[DwcaArchive.close]] deletes it).
+    */
   def open(spark: SparkSession, path: String): DwcaArchive = {
     val f = new File(path)
-    val dir =
-      if (f.isDirectory) f
-      else if (f.isFile) extractZip(f)
+    val (dir, owned) =
+      if (f.isDirectory) (f, false)
+      else if (f.isFile) (extractZip(f), true)
       else throw new IllegalArgumentException(s"archive not found: $path")
-    val meta = new File(dir, "meta.xml")
-    if (!meta.isFile)
-      throw new IllegalArgumentException(s"no meta.xml in archive: $path")
-    new DwcaArchive(spark, MetaXml.parse(meta), dir)
+    try {
+      val meta = new File(dir, "meta.xml")
+      if (!meta.isFile)
+        throw new IllegalArgumentException(s"no meta.xml in archive: $path")
+      new DwcaArchive(spark, MetaXml.parse(meta), dir, owned)
+    } catch {
+      case e: Throwable =>
+        if (owned) deleteTree(dir)
+        throw e
+    }
   }
+
+  /** The Spark CSV options a table's dialect maps to. Empty fields read as
+    * null (pandas reads them as NaN); an empty quote string disables quote
+    * handling (the DwCA default, fieldsEnclosedBy="").
+    *
+    * lineSep handling: unset, Spark's CSV parser covers \n, \r\n and \r
+    * uniformly (both fixture dialects). A declared single-char custom
+    * terminator is honored; anything else must fail LOUDLY — silently
+    * newline-splitting a differently-terminated file would corrupt every
+    * downstream count.
+    */
+  private[graft] def csvOptions(d: CsvDialect): Map[String, String] = {
+    val base = Map(
+      "sep" -> d.fieldsTerminatedBy,
+      "encoding" -> d.encoding,
+      "nullValue" -> "",
+      "quote" -> d.fieldsEnclosedBy)
+    d.linesTerminatedBy match {
+      case "" | "\n" | "\r\n" | "\r" => base
+      case sep if sep.length == 1 => base + ("lineSep" -> sep)
+      case sep => throw new IllegalArgumentException(
+        s"unsupported linesTerminatedBy ${sep.map(c => f"\\u${c.toInt}%04x").mkString}: " +
+          "Spark's CSV source supports \\n/\\r\\n/\\r or a single custom character")
+    }
+  }
+
+  /** The column names Spark's CSV header inference gives the data file at
+    * `path`, computed on the driver without a job: the first line that is
+    * not blank, read with Spark's own line reader (declared encoding and
+    * terminator, compression by file extension), tokenised with the univocity
+    * settings Spark derives from the dialect, named like Spark names an
+    * inferred header (`_cN` without one). An empty file has no columns, as
+    * in Spark's inference; a missing one is left to the read to report.
+    *
+    * "Blank" is judged as the scan's own header skip judges it (nothing left
+    * after trimming whitespace and control characters). Spark's inference
+    * trims spaces only, so it took a first line of tabs for the header that
+    * its scan then skipped; here the header is the line the scan skips to.
+    */
+  private[graft] def physicalColumns(
+      spark: SparkSession, path: String, d: CsvDialect, header: Boolean): Seq[String] = {
+    val opts = new CSVOptions(csvOptions(d) + ("header" -> header.toString),
+      true, spark.conf.get("spark.sql.session.timeZone"))
+    val firstRow =
+      if (!new File(path).isFile) None
+      else CSVUtils.readHeaderLine(new HadoopPath(path), opts, spark.sparkContext.hadoopConfiguration)
+        .flatMap(line => Option(new CsvParser(opts.asParserSettings).parseLine(line)))
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+    firstRow.map(r => CSVUtils.makeSafeHeader(r, caseSensitive, opts).toSeq).getOrElse(Nil)
+  }
+
+  private[dwca] def deleteTree(dir: File): Unit =
+    if (dir.exists())
+      Files.walk(dir.toPath)
+        .sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
 
   /** Ceiling on driver-side extraction (bytes). Zip archives are unpacked
     * on the driver — the one deliberately non-distributed step (matches
@@ -178,8 +248,9 @@ object DwcaArchive {
   val MaxExtractBytes: Long = 8L << 30
 
   private[graft] def extractZip(zip: File, maxBytes: Long = MaxExtractBytes): File = {
+    // no deleteOnExit: it is a no-op on a non-empty directory, and every
+    // call would grow the JVM's exit-hook list; the owner deletes the tree
     val tmp = Files.createTempDirectory("dwca-").toFile
-    tmp.deleteOnExit()
     val zf = new ZipFile(zip)
     var extracted = 0L
     var ok = false
@@ -215,13 +286,9 @@ object DwcaArchive {
       ok = true
     } finally {
       zf.close()
-      // deleteOnExit is a no-op on a non-empty dir: a failed extraction
-      // (cap breach, bad entry) must not leave partial gigabytes behind
-      if (!ok) {
-        Files.walk(tmp.toPath)
-          .sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
+      // a failed extraction (cap breach, bad entry) must not leave partial
+      // gigabytes behind
+      if (!ok) deleteTree(tmp)
     }
     tmp
   }

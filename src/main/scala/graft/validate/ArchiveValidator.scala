@@ -29,6 +29,16 @@ object ArchiveValidator {
       idFields: Seq[String] = Nil,
       referenceCompatibleNumericWarnings: Boolean = false): DwCAValidationReport = {
     val archive = DwcaArchive.open(spark, path)
+    // every action on the archive's frames runs before this returns, so
+    // its zip extraction (if any) can go as soon as the report is built
+    try report(archive, idFields, referenceCompatibleNumericWarnings)
+    finally archive.close()
+  }
+
+  private def report(
+      archive: DwcaArchive,
+      idFields: Seq[String],
+      referenceCompatibleNumericWarnings: Boolean): DwCAValidationReport = {
     val core = archive.descriptor.core
     val coreDf = archive.coreDataFrame
     val coreType = core.rowType

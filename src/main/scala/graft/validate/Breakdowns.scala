@@ -1,6 +1,6 @@
 package graft.validate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.ListMap
@@ -10,13 +10,13 @@ import Lenient.qcol
 /** Group-by summary statistics for the archive report (reference:
   * dwc_validator/breakdown.py).
   *
-  * Scale notes: the three simple histograms (year/month/day) fuse into ONE
-  * grouping-sets aggregation pass, as do the three eventDate-derived
-  * histograms — 2 scans instead of the reference's 6. Top-k breakdowns plan
-  * as TakeOrderedAndProject (bounded, no full-sort materialization).
-  * Histogram key cardinality is expected small (years/months/days); top-k is
-  * capped at 20 — nothing unbounded is ever collected to the driver except
-  * the simple histograms the reference also materializes in full.
+  * Scale notes: every breakdown — the year/month/day histograms, the two
+  * top-20s and the three eventDate-derived histograms — comes out of ONE
+  * keyed pass ([[KeyedPass]]): one scan instead of the reference's 6, and
+  * one action for all of them. Each set keeps a bounded number of
+  * groups on the executors (20 per top-k, `HistogramMaxGroups + 1` per
+  * histogram), so nothing unbounded is ever collected to the driver;
+  * histogram key cardinality is expected small (years/months/days).
   */
 object Breakdowns {
 
@@ -33,37 +33,44 @@ object Breakdowns {
     * (SURVEY.md T7). Keys are normalized to strings.
     */
   def generate(df: DataFrame): ListMap[String, ListMap[String, Long]] = {
+    import KeyedPass.KeySet
     val has = df.columns.toSet
-    var out = ListMap.empty[String, ListMap[String, Long]]
-
-    // year/month/day simple histograms — one grouping-sets pass.
     val simpleFields = Seq("year", "month", "day").filter(has)
-    if (simpleFields.nonEmpty) {
-      val hists = groupingSetHistograms(df, simpleFields.map(f => f -> qcol(f).cast("string")))
-      simpleFields.foreach { f =>
-        // pandas value_counts drops nulls and orders by count desc
-        // (breakdown.py:72-74); ties broken by key for determinism.
-        out += f -> sortByCountDesc(hists(f))
-      }
-    }
+    // top-20 value breakdowns (breakdown.py:54-62); ties broken by value
+    // for determinism, as in topValues
+    val topFields = Seq("scientificName", "family").filter(has)
+    val derivedFields = if (has("eventDate")) Seq("year", "month", "day") else Nil
+    if (simpleFields.isEmpty && topFields.isEmpty && derivedFields.isEmpty) return ListMap.empty
 
-    // top-20 value breakdowns (breakdown.py:54-62).
-    Seq("scientificName", "family").filter(has).foreach { f =>
-      out += f -> topValues(df, f, 20)
-    }
+    // the lenient timestamp parse is projected once per row, not per key
+    val ts = col("__ts")
+    val input = df.select((simpleFields ++ topFields).map(qcol) ++
+      derivedFields.headOption.map(_ => Lenient.toTimestamp(qcol("eventDate")).as("__ts")): _*)
+    // A histogram set keeps HistogramMaxGroups + 1 groups so overflow is
+    // DETECTED (a bare cap would silently drop groups); its null group is
+    // kept too, because it counts against the cap like any other group.
+    val hist = HistogramMaxGroups + 1
+    val derivedKey = Map("year" -> year(ts), "month" -> month(ts), "day" -> dayofmonth(ts))
+    val groups = KeyedPass.run(input,
+      simpleFields.map(f => KeySet(qcol(f), hist, byCount = true, keepNull = true)) ++
+        topFields.map(f => KeySet(qcol(f), 20, byCount = true)) ++
+        derivedFields.map(f => KeySet(derivedKey(f), hist, byCount = true)))
+    val (simple, rest) = groups.splitAt(simpleFields.size)
+    val (top, derived) = rest.splitAt(topFields.size)
+    checkHistogramCap(simpleFields, simple)
+    checkHistogramCap(derivedFields, derived)
 
+    var out = ListMap.empty[String, ListMap[String, Long]]
+    // pandas value_counts drops nulls and orders by count desc
+    // (breakdown.py:72-74); ties broken by key for determinism.
+    simpleFields.zip(simple).foreach { case (f, g) =>
+      out += f -> sortByCountDesc(g.filter(_._1 != null))
+    }
+    topFields.zip(top).foreach { case (f, g) => out += f -> ListMap(g: _*) }
     // eventDate-derived year/month/day histograms (breakdown.py:77-102)
     // overwrite the simple ones; pandas groupby sorts by key ascending.
-    if (has("eventDate")) {
-      val ts = Lenient.toTimestamp(qcol("eventDate"))
-      val parsed = df.select(ts.as("__ts")).filter(col("__ts").isNotNull)
-      val hists = groupingSetHistograms(parsed, Seq(
-        "year" -> year(col("__ts")).cast("string"),
-        "month" -> month(col("__ts")).cast("string"),
-        "day" -> dayofmonth(col("__ts")).cast("string")))
-      Seq("year", "month", "day").foreach { f =>
-        out = overwrite(out, f, sortByKeyNumeric(hists(f)))
-      }
+    derivedFields.zip(derived).foreach { case (f, g) =>
+      out = overwrite(out, f, sortByKeyNumeric(g))
     }
     out
   }
@@ -100,35 +107,16 @@ object Breakdowns {
     ListMap(rows.map(r => r.getString(0) -> r.getLong(1)).toIndexedSeq: _*)
   }
 
-  /** All requested histograms in one pass via GROUPING SETS: each set is one
-    * single-column grouping, so one shuffle produces every histogram.
+  /** One family of histograms (the plain or the eventDate-derived
+    * year/month/day) may hold at most HistogramMaxGroups groups in all,
+    * null groups included: a truncated histogram would be silently wrong.
     */
-  private def groupingSetHistograms(
-      df: DataFrame, fields: Seq[(String, Column)]): Map[String, Seq[(String, Long)]] = {
-    val projected = df.select(fields.map { case (n, c) => c.as(n) }: _*)
-    // Collect cap+1 rows so overflow is DETECTED: a bare limit(cap) would
-    // silently keep an arbitrary, nondeterministic subset of groups and
-    // return a wrong histogram with no error.
-    val grouped = projected
-      .groupingSets(fields.map(f => Seq(col(f._1))), fields.map(f => col(f._1)): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .limit(HistogramMaxGroups + 1)
-      .collect()
-    if (grouped.length > HistogramMaxGroups)
+  private def checkHistogramCap(fields: Seq[String], groups: Seq[Seq[(String, Long)]]): Unit =
+    if (groups.map(_.size).sum > HistogramMaxGroups)
       throw new IllegalStateException(
         s"histogram group cardinality exceeds HistogramMaxGroups=$HistogramMaxGroups " +
-          s"for fields ${fields.map(_._1).mkString(",")}; a truncated histogram would " +
+          s"for fields ${fields.mkString(",")}; a truncated histogram would " +
           "be silently wrong — use topValues() for high-cardinality columns")
-    fields.map { case (name, _) =>
-      val idx = fields.indexWhere(_._1 == name)
-      // In a grouping-sets row, exactly one grouping column is non-null
-      // (nulls in the source were dropped by value_counts semantics anyway).
-      val entries = grouped.toSeq
-        .filter(r => !r.isNullAt(idx) && fields.indices.forall(j => j == idx || r.isNullAt(j)))
-        .map(r => r.getString(idx) -> r.getLong(fields.size))
-      name -> entries
-    }.toMap
-  }
 
   private def sortByCountDesc(entries: Seq[(String, Long)]): ListMap[String, Long] =
     ListMap(entries.sortBy { case (k, cnt) => (-cnt, k) }: _*)

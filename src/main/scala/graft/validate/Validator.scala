@@ -16,8 +16,9 @@ import Lenient.qcol
   * dwc_validator/validate.py — ~10 scans per report, SURVEY.md §3) as ONE
   * fused `df.agg(...)` pass: every check below is an algebraic aggregate, so
   * the whole report is a single partial/final HashAggregate job over the
-  * data (plus one tiny bounded job per vocabulary non-matching sample).
-  * At 100 TB that is the difference between 10 scans and 1.
+  * data (plus, when any vocabulary field has unrecognised values, one
+  * bounded keyed pass that samples every such field at once).
+  * At 100 TB that is the difference between 10 scans and 1 or 2.
   */
 object Validator {
 
@@ -242,15 +243,19 @@ object Validator {
         }
       }
 
-    val vocabReports = vocabFields.map { case (f, vocabLower) =>
-      if (!has(f)) VocabularyReport(f, has_field = false, 0, 0, Nil)
-      else {
-        val nulls = recordCount - n(s"cc__$f")
-        val recognised = n(s"vocab__$f")
-        val unrecognised = recordCount - (nulls + recognised)
-        val nonMatching =
-          if (unrecognised > 0) vocabSample(df, f, vocabLower, nulls > 0) else Nil
-        VocabularyReport(f, has_field = true, recognised, unrecognised, nonMatching)
+    val vocabCounts = vocabFields.collect { case (f, vocabLower) if has(f) =>
+      val nulls = recordCount - n(s"cc__$f")
+      val recognised = n(s"vocab__$f")
+      f -> (nulls, recognised, recordCount - (nulls + recognised))
+    }.toMap
+    val samples = vocabSamples(df,
+      vocabFields.filter { case (f, _) => vocabCounts.get(f).exists(_._3 > 0) })
+    val vocabReports = vocabFields.map { case (f, _) =>
+      vocabCounts.get(f) match {
+        case None => VocabularyReport(f, has_field = false, 0, 0, Nil)
+        case Some((nulls, recognised, unrecognised)) =>
+          val nonMatching = samples.get(f).map(nanSlice(_, nulls > 0)).getOrElse(Nil)
+          VocabularyReport(f, has_field = true, recognised, unrecognised, nonMatching)
       }
     }
 
@@ -274,18 +279,24 @@ object Validator {
   /** A15 — bounded sample of unrecognised vocabulary values (reference:
     * validate.py:297-300): distinct, lexicographically sorted, first 10.
     * The reference stringifies pandas NaN to "nan", sorts it among the real
-    * values, slices 10, then removes "nan" — replicated here driver-side by
-    * merging a synthetic "nan" into the sorted sample when nulls exist
-    * (SURVEY.md T5; we fetch 11 real values so the slice stays exact).
-    * Plans as TakeOrderedAndProject — no unbounded collect at any scale.
+    * values, slices 10, then removes "nan" — replicated driver-side by
+    * [[nanSlice]] (SURVEY.md T5; we fetch 11 real values so the slice stays
+    * exact). Every field that needs a sample is sampled in ONE bounded
+    * keyed pass: at most 11 distinct values per field reach the driver, at
+    * any scale, and the table is scanned once, not once per field.
     */
-  private def vocabSample(
-      df: DataFrame, field: String, vocabLower: Seq[String], hasNulls: Boolean): Seq[String] = {
-    val c = qcol(field).cast("string")
-    val reals = df
-      .filter(qcol(field).isNotNull && !lower(c).isin(vocabLower: _*))
-      .select(c.as("v")).distinct().orderBy("v").limit(11)
-      .collect().map(_.getString(0)).toSeq
+  private[graft] def vocabSamples(
+      df: DataFrame, fields: Seq[(String, Seq[String])]): Map[String, Seq[String]] = {
+    val sets = fields.map { case (f, vocabLower) =>
+      val c = qcol(f).cast("string")
+      KeyedPass.KeySet(when(qcol(f).isNotNull && !lower(c).isin(vocabLower: _*), c),
+        limit = 11, byCount = false)
+    }
+    fields.map(_._1).zip(KeyedPass.run(df, sets).map(_.map(_._1))).toMap
+  }
+
+  /** The reference's NaN handling on a sorted sample of real values. */
+  private[validate] def nanSlice(reals: Seq[String], hasNulls: Boolean): Seq[String] = {
     // distinct first: numpy unique collapses a literal "nan" string and
     // the NaN indicator into ONE entry; without it both would occupy
     // sample slots and filterNot would remove two
